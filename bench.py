@@ -470,12 +470,20 @@ def main() -> None:
     # of the suite's 41 — 1/3 of the driver's verify window. Unset (the
     # driver never sets it) the behavior is bit-identical to before;
     # set, HEADLINE is filtered to the named queries. No timed region
-    # changes either way.
+    # changes either way. A name outside HEADLINE, or a filter that
+    # leaves nothing to run, exits non-zero before the idle wait and
+    # the JVM: a typo must not silently bench a smaller set.
     headline = HEADLINE
     only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     if only:
         wanted = {n.strip() for n in only.split(",") if n.strip()}
         headline = [n for n in HEADLINE if n in wanted]
+        unknown = sorted(wanted.difference(HEADLINE))
+        if unknown or not headline:
+            sys.exit(
+                "SPARK_GRAFT_BENCH_QUERIES names no runnable query; "
+                f"not in HEADLINE: {', '.join(unknown) or '(none)'}"
+            )
     # External-contention snapshot BEFORE the JVM exists: loadavg here
     # is other workloads only. Samples taken mid-run include the
     # bench's own threads and cannot distinguish a stolen core from

@@ -16,12 +16,15 @@ extension per BASELINE.json.
 
 from __future__ import annotations
 
+from operator import eq
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import MOD31 as MOD  # 31-bit hashes: ANSI-overflow-safe
 from ..functions.hashing import char_shingles, hashed, minhash_perm, word_shingles
+from .iterate import fixpoint
 
 
 def spread(df: DataFrame, col: str) -> DataFrame:
@@ -469,9 +472,7 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 6,
-    early_stop: bool = True,
     stats: dict | None = None,
-    rounds_per_checkpoint: int = 1,
 ) -> DataFrame:
     """Cluster assignment over a near-dup pair graph: each node gets
     cluster = the minimum doc id reachable within `max_iter` hops —
@@ -484,38 +485,19 @@ def connected_components(
     never adjacency blowups. Near-dup graphs are SHALLOW (near-dups of
     a doc are near-dups of each other, so components are
     quasi-cliques); a small fixed max_iter converges in practice, and
-    `early_stop` exits as soon as the (strictly monotone) label sum
-    stops decreasing — fixpoint detection for one cheap aggregate per
-    round. For adversarially long chains use the log-doubling
+    the loop exits as soon as the (strictly monotone) label sum stops
+    decreasing — fixpoint detection for one cheap aggregate per round.
+    For adversarially long chains use the log-doubling
     large-star/small-star variant (Kiveris et al.) — same join/agg
     building blocks.
 
-    Iterative algorithms REQUIRE lineage truncation: each round
-    references the previous labels twice (message join + union), so an
-    un-truncated recursion doubles the logical plan per round — 2^8
-    copies of the upstream pair-generation plan OOMs the driver during
-    ANALYSIS, before any data moves. localCheckpoint per iteration
-    (the same strategy GraphX uses) materializes each frontier and
-    resets its plan to a leaf. This makes the operator eager by
-    design — an honest property of fixpoint loops on Spark.
-
-    Superseded frontiers are freed EAGERLY: checkpoint blocks are not
-    evictable and spark.catalog.clearCache() does not touch them, so
-    without explicit release every call would strand max_iter+1 block
-    sets in executor storage until a driver GC — measured degrading
-    subsequent heavy queries in the same session by 2-3×. Only the
-    final labels' blocks survive (the returned DataFrame reads them);
-    callers wanting a fully clean session can unpersist via the same
-    analyzed-plan handle after materializing."""
-
-    def _free(ck: DataFrame) -> None:
-        # the checkpoint blocks belong to the LogicalRDD behind the
-        # checkpointed frame; best-effort (plan accessor is internal)
-        try:
-            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-
+    The rounds run on `operators.iterate.fixpoint`, which checkpoints
+    each round (each round reads the previous labels twice, so an
+    un-truncated plan doubles per round and OOMs the driver during
+    analysis) and frees the round it replaced. This makes the operator
+    eager by design — an honest property of fixpoint loops on Spark.
+    Only the final labels' blocks survive (the returned DataFrame reads
+    them)."""
     e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     # repartition BY KEY with NO explicit count before checkpointing:
     # the symmetrized union would otherwise checkpoint at 2× the input
@@ -551,75 +533,39 @@ def connected_components(
     labels = nodes.select(
         F.col("src").alias("node"), F.col("src").alias("label")
     )
-    # convergence signal: labels only ever DECREASE (min-propagation),
-    # so the label sum is strictly monotone until fixpoint — an
-    # unchanged sum means converged. One overflow-safe aggregate per
-    # round, far cheaper than a changed-rows join; worth it because
-    # near-dup graphs usually converge in 2-3 of the max_iter rounds.
-    def _label_sum(df: DataFrame):
-        return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
-    prev_sum = _label_sum(labels) if early_stop else None
-    iterations, converged = 0, False
-    # rounds_per_checkpoint > 1 fuses that many propagation rounds into
-    # one materialized job: each fused round adds a join+agg layer to
-    # the plan (bounded depth — no lineage explosion), and the
-    # checkpoint + convergence collect run once per GROUP. On the
-    # shallow quasi-clique graphs dedup produces, per-round cost is
-    # job-scheduling overhead, not data volume, so halving the job
-    # count is a direct win; the price is fixpoint detection at group
-    # granularity (up to rounds_per_checkpoint−1 extra rounds of work
-    # after convergence — keep the default 1 when exact round counts
-    # matter).
-    while iterations < max_iter:
-        chunk = min(rounds_per_checkpoint, max_iter - iterations)
-        stepped = labels
-        for _ in range(chunk):
-            # self-loops make the union redundant: messages to dst
-            # already include dst's own label
-            stepped = (
-                edges.join(stepped, edges["src"] == stepped["node"])
-                .select(F.col("dst").alias("node"), "label")
-                .groupBy("node")
-                .agg(F.min("label").alias("label"))
-            )
-        # LAZY checkpoint + let the convergence collect materialize it:
-        # one job per round instead of an eager-checkpoint job PLUS the
-        # label-sum job (r12 — halves the round count's scheduling).
-        new_labels = stepped.localCheckpoint(eager=False)
-        iterations += chunk
-        if early_stop:
-            s = _label_sum(new_labels)  # materializes the checkpoint
-            _free(labels)  # predecessor blocks no longer referenced
-            labels = new_labels
-            if s == prev_sum:
-                converged = True
-                break
-            prev_sum = s
-        else:
-            # no collect ever runs: the whole loop stays lazy and
-            # materializes pipelined at the caller's first action;
-            # intermediate blocks are ContextCleaner-released after the
-            # final checkpoint truncates their lineage
-            labels = new_labels
-    if early_stop:
-        # the returned labels are materialized (the last label-sum job),
-        # so the edge/node/sym checkpoints can be released now; in the
-        # lazy (early_stop=False) path they are still needed by the
-        # caller's first action and the ContextCleaner handles them
-        _free(edges)
-        if iterations > 0:
-            # the initial labels frame was a PROJECTION of the nodes
-            # checkpoint; once the first iteration materialized its own
-            # checkpoint nothing reads nodes anymore
-            _free(nodes)
-            _free(sym0)
+    def propagate(labels: DataFrame, _sum, _pin) -> DataFrame:
+        # self-loops make the union redundant: messages to dst already
+        # include dst's own label
+        return (
+            edges.join(labels, edges["src"] == labels["node"])
+            .select(F.col("dst").alias("node"), "label")
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+        )
+
+    labels, iterations, converged = fixpoint(
+        labels, propagate, _label_sum, eq, max_iter,
+        inputs=(edges, nodes, sym0),
+    )
     if stats is not None:
         # observability for tests/operators: how many propagation rounds
         # ran and whether the fixpoint (not the iteration cap) ended them
         stats["iterations"] = iterations
         stats["converged"] = converged
     return labels.select("node", F.col("label").alias("cluster"))
+
+
+def _label_sum(labels: DataFrame):
+    """Convergence signal of the min-label loops: labels only ever
+    DECREASE, so the sum is strictly monotone until the fixpoint — one
+    overflow-safe aggregate per round, far cheaper than a changed-rows
+    join. An empty graph reads 0, never None, so it is not mistaken
+    for converged before its first round."""
+    return (
+        labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+        or 0
+    )
 
 
 def connected_components_jump(
@@ -649,16 +595,9 @@ def connected_components_jump(
     count. Labels are always existing node ids (mins of the node set),
     so the shortcut join is a total inner join — no row loss.
 
-    Same engineering contract as the plain variant: localCheckpoint
-    per round (lineage reset), eager block release of superseded
-    frontiers, label-sum fixpoint detection (labels only decrease)."""
-
-    def _free(ck: DataFrame) -> None:
-        try:
-            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-
+    Same engineering contract as the plain variant: rounds on
+    `operators.iterate.fixpoint`, label-sum fixpoint detection (labels
+    only decrease)."""
     e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     # pinned ONCE (r12, same as the plain variant): `edges` and the
     # nodes/labels init both consume sym, and un-pinned each consumer
@@ -686,49 +625,25 @@ def connected_components_jump(
         eager=False
     )
 
-    def _label_sum(df: DataFrame):
-        return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
-
-    prev_sum = _label_sum(labels)
-    iterations, converged = 0, False
-    for _ in range(max_iter):
+    def jump(labels: DataFrame, _sum, pin) -> DataFrame:
         msgs = edges.join(labels, edges["src"] == labels["node"]).select(
             F.col("dst").alias("node"), F.col("label").alias("label")
         )
-        # checkpoint BEFORE the shortcut: the self-join needs a leaf
-        # plan on both sides (and the next iteration reads this frame
-        # twice — lineage reset, same contract as the plain variant).
-        # LAZY: the round's label-sum collect materializes both this
-        # and the shortcut checkpoint in one job (r12 — the eager form
-        # cost three blocking jobs per round).
-        propagated = (
-            msgs.groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
+        # pin BEFORE the shortcut: the self-join needs a leaf plan on
+        # both sides. The round's label-sum collect materializes both
+        # this and the round's own checkpoint in one job.
+        propagated = pin(msgs.groupBy("node").agg(F.min("label").alias("label")))
         # shortcut (path halving): label <- min(label, label(label)).
         # Inner join is total: every label is an existing node id.
         l, m = propagated.alias("l"), propagated.alias("m")
-        new_labels = (
-            l.join(m, F.col("l.label") == F.col("m.node"))
-            .select(
-                F.col("l.node").alias("node"),
-                F.least(F.col("l.label"), F.col("m.label")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+        return l.join(m, F.col("l.label") == F.col("m.node")).select(
+            F.col("l.node").alias("node"),
+            F.least(F.col("l.label"), F.col("m.label")).alias("label"),
         )
-        iterations += 1
-        s = _label_sum(new_labels)  # materializes propagated + shortcut
-        _free(labels)
-        _free(propagated)  # new_labels' lineage is truncated now
-        labels = new_labels
-        if s == prev_sum:
-            converged = True
-            break
-        prev_sum = s
-    _free(edges)
-    if iterations > 0:
-        _free(sym)  # edges/labels materialized; sym's blocks unneeded
+
+    labels, iterations, converged = fixpoint(
+        labels, jump, _label_sum, eq, max_iter, inputs=(edges, sym)
+    )
     if stats is not None:
         stats["iterations"] = iterations
         stats["converged"] = converged

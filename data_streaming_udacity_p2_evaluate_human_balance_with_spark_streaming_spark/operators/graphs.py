@@ -18,16 +18,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _free(ck: DataFrame) -> None:
-    """Release a materialized localCheckpoint's blocks (best-effort;
-    the plan accessor is internal). Checkpoint blocks are non-evictable
-    and invisible to clearCache(), so every superseded frontier must be
-    freed explicitly once its successor's blocks exist."""
-    try:
-        ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+from .iterate import fixed_rounds, fixpoint, free
 
 
 def triangle_counts(
@@ -110,15 +101,13 @@ def k_core(
     standard graph-cleanup pass before community/cohesion analysis —
     pendant chains and sparse fuzz vanish, dense structure stays.
 
-    Iteration shape (the connected_components discipline): each round
-    is one degree aggregate + one broadcast-able anti-join of the
-    surviving edge list against the peeled node set; the edge frontier
-    is localCheckpoint-ed per round (bounded plan depth) and superseded
-    checkpoints are freed eagerly (non-evictable blocks leak
-    otherwise). Peeling terminates in ≤ |V| rounds; real graphs need
-    few — each round removes every currently-under-k node at once.
-    Fixpoint = a round that deletes nothing (count unchanged — one
-    scalar collect per round, same as the CC label-sum signal).
+    Iteration shape: each round is one degree aggregate + one
+    broadcast-able anti-join of the surviving edge list against the
+    peeled node set, run by `operators.iterate.fixpoint` (per-round
+    checkpoint and release). Peeling terminates in ≤ |V| rounds; real
+    graphs need few — each round removes every currently-under-k node
+    at once. Fixpoint = a round that deletes nothing (count unchanged —
+    one scalar collect per round, same as the CC label-sum signal).
 
     Fully DuckDB-oracle-able despite the fixpoint loop: a recursive
     CTE can't DELETE, but it can re-emit the peeled working set with
@@ -130,10 +119,8 @@ def k_core(
 
     Returns the surviving edges (a_col, b_col)."""
 
-    # lazy checkpoints materialized by the (required) fixpoint count:
-    # one job per peel round instead of a blocking checkpoint job PLUS
-    # the count (r12; superseded rounds still freed eagerly — their
-    # blocks exist once the count returns).
+    # the (required) fixpoint count materializes each round's lazy
+    # checkpoint: one job per peel round.
     #
     # r13 NEGATIVE RESULT (don't retry): fusing the fixpoint count to
     # every-2-rounds (the VERDICT r12 #7 candidate) measured ~19%
@@ -144,12 +131,7 @@ def k_core(
     # while the count it saves is a cheap fixed barrier. Fused checks
     # pay off only when the per-round work is trivial next to the
     # barrier (not true for peeling).
-    cur = edges.select(a_col, b_col).repartition(a_col).localCheckpoint(
-        eager=False
-    )
-    n_edges = cur.count()
-    rounds, converged = 0, False
-    for _ in range(max_iter):
+    def peel_round(cur: DataFrame, _count, _pin) -> DataFrame:
         deg = (
             cur.select(F.col(a_col).alias("n"))
             .unionByName(cur.select(F.col(b_col).alias("n")))
@@ -157,7 +139,7 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         peel = deg.filter(F.col("d") < k).select("n")
-        nxt = (
+        return (
             cur.join(
                 F.broadcast(peel.select(F.col("n").alias(a_col))), a_col, "left_anti"
             )
@@ -165,20 +147,15 @@ def k_core(
                 F.broadcast(peel.select(F.col("n").alias(b_col))), b_col, "left_anti"
             )
             .select(a_col, b_col)
-            .localCheckpoint(eager=False)
         )
-        prev = cur
-        cur = nxt
-        rounds += 1
-        m = cur.count()
-        _free(prev)
-        if m == n_edges:
-            converged = True
-            break
-        n_edges = m
-        if m == 0:
-            converged = True
-            break
+
+    cur, rounds, converged = fixpoint(
+        edges.select(a_col, b_col).repartition(a_col).localCheckpoint(eager=False),
+        peel_round,
+        DataFrame.count,
+        lambda prev, m: m in (prev, 0),
+        max_iter,
+    )
     if stats is not None:
         stats["rounds"] = rounds
         stats["converged"] = converged
@@ -213,22 +190,13 @@ def pagerank_integer(
     BIGINT arithmetic would otherwise wrap silently and emit wrong
     ranks with no error.
 
-    Iteration shape (r12): each of the fixed `iterations` rounds is one
-    join (ranks onto out-edges) + one aggregate (contributions per
-    destination), lineage-truncated by a LAZY localCheckpoint — the
-    recurrence has no per-round driver decision, so the old eager
-    per-round materialization added one blocking count job + a full
-    rank-table block write per round for nothing (with AQE the round's
-    shuffles already execute at plan-compile time; the lazy form just
-    skips the extra job — measured ~9% warm and 60→48 jobs on the
-    copurchase query, scripts/ diag r12). Only the LAST round is eager,
-    which materializes the whole chain, after which every superseded
-    round's blocks are freed explicitly — lazy checkpoints MUST keep
-    the eager-free discipline or each call strands ~iterations block
-    sets and degrades later queries in the session (measured 2× on the
-    r12 profile sweep before the frees were restored). Symmetrized
-    edges mean no dangling nodes (every node has out-degree ≥ 1), so
-    total mass is conserved up to truncation.
+    Iteration shape: each of the fixed `iterations` rounds is one join
+    (ranks onto out-edges) + one aggregate (contributions per
+    destination), run by `operators.iterate.fixed_rounds` (lazy
+    per-round checkpoints, eager final round, replaced rounds freed —
+    the lazy form measured ~9% warm and 60→48 jobs on the copurchase
+    query in r12). Symmetrized edges mean no dangling nodes (every node
+    has out-degree ≥ 1), so total mass is conserved up to truncation.
 
     Returns (node, rank) with rank the final fixed-point integer."""
 
@@ -256,25 +224,20 @@ def pagerank_integer(
             f"BIGINT silently (ANSI off). Lower `scale` (need scale < "
             f"{2**63 // max(1, damping_pct * n_nodes)})."
         )
-    history = [ranks]
-    for it in range(iterations):
+
+    def rank_round(ranks: DataFrame, _k, _pin) -> DataFrame:
         contrib = (
             e2.join(ranks, e2["src"] == ranks["node"])
             .select("dst", F.expr("r DIV od").alias("_c"))
             .groupBy("dst")
             .agg(F.sum("_c").alias("_sum"))
         )
-        ranks = contrib.select(
+        return contrib.select(
             F.col("dst").alias("node"),
             (F.lit(base) + F.expr(f"({damping_pct} * _sum) DIV 100")).alias("r"),
-        ).localCheckpoint(eager=(it == iterations - 1))
-        history.append(ranks)
-    # the eager final checkpoint materialized (and truncated) every
-    # intermediate round en route; release their blocks now
-    for h in history[:-1]:
-        _free(h)
-    _free(e2)
-    return ranks
+        )
+
+    return fixed_rounds(ranks, rank_round, iterations, inputs=(e2,))
 
 
 def bfs_hops(
@@ -309,19 +272,6 @@ def bfs_hops(
 
     Returns (node, hop) for all reached nodes, hop ∈ [0, max_hops];
     unreached nodes are simply absent (callers can anti-join)."""
-    # Pin the symmetric edge list ONCE: the per-round joins must not
-    # re-derive it (for a composed edge construction — self-join +
-    # distinct — lazy reuse re-executes the whole upstream every
-    # round; measured 4x round cost on the copurchase query). Lazy:
-    # round 1's count materializes it alongside the first frontier.
-    sym = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .repartition("src")
-        .localCheckpoint(eager=False)
-    )
     frontier0 = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
@@ -329,33 +279,67 @@ def bfs_hops(
         .repartition("node")
         .localCheckpoint(eager=False)
     )
+    hops, rounds = _bfs_frontiers(edges, frontier0, ["node"], max_hops, a_col, b_col)
+    if stats is not None:
+        stats["rounds"] = rounds
+    return hops
+
+
+def _symmetric_edges(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Both directions of every (a, b) edge as (src, dst), pinned ONCE
+    so per-round joins never re-derive it (for a composed edge
+    construction — self-join + distinct — lazy reuse re-executes the
+    whole upstream every round; measured 4x round cost on the
+    copurchase query). Lazy: the first round's job materializes it."""
+    return (
+        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        .unionByName(
+            edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+        )
+        .repartition("src")
+        .localCheckpoint(eager=False)
+    )
+
+
+def _bfs_frontiers(
+    edges: DataFrame,
+    frontier0: DataFrame,
+    keys: list,
+    max_hops: int,
+    a_col: str,
+    b_col: str,
+) -> tuple[DataFrame, int]:
+    """The frontier loop behind bfs_hops and bfs_hops_tagged.
+    `frontier0` holds `keys` + hop 0, where keys is ["node"] or
+    ["seed", "node"]; returns (the union of every frontier, rounds run
+    including the final empty one)."""
+    sym = _symmetric_edges(edges, a_col, b_col)
+    tags = keys[:-1]
     fronts = [frontier0]
-    frontier = frontier0.select("node")
+    frontier = frontier0.select(*keys)
     rounds = 0
     for h in range(1, max_hops + 1):
-        visited_nodes = reduce(
-            lambda x, y: x.unionByName(y), (f.select("node") for f in fronts)
+        visited = reduce(
+            lambda x, y: x.unionByName(y), (f.select(*keys) for f in fronts)
         )
         reached = (
             frontier.join(sym, frontier["node"] == sym["src"])
-            .select(F.col("dst").alias("node"))
+            .select(*tags, F.col("dst").alias("node"))
             .distinct()
         )
         new = (
-            reached.join(visited_nodes, "node", "left_anti")
+            reached.join(visited, keys, "left_anti")
             .withColumn("hop", F.lit(h))
             .localCheckpoint(eager=False)
         )
         rounds += 1
         if new.count() == 0:
-            _free(new)
+            free(new)
             break
         fronts.append(new)
-        frontier = new.select("node")
-    _free(sym)  # every front is count-materialized; sym is unneeded
-    if stats is not None:
-        stats["rounds"] = rounds
-    return reduce(lambda x, y: x.unionByName(y), fronts)
+        frontier = new.select(*keys)
+    free(sym)  # every front is count-materialized; sym is unneeded
+    return reduce(lambda x, y: x.unionByName(y), fronts), rounds
 
 
 def label_propagation(
@@ -378,30 +362,11 @@ def label_propagation(
     map-side partials, then a per-node argmax as max(struct(count,
     -label)) — an aggregate, NEVER a window over a corpus-sized
     partition. ZERO driver round-trips (no convergence test — R is
-    structural), so r12 runs the rounds on LAZY localCheckpoints (plan
-    depth still bounded; the eager per-round count job is skipped —
-    with AQE the round's shuffles execute at compile time either way).
-    The LAST round is eager, materializing the chain, after which every
-    superseded round's blocks are freed explicitly (lazy checkpoints
-    must keep the eager-free discipline — see pagerank_integer).
+    structural), so the rounds run on `operators.iterate.fixed_rounds`.
 
     Returns (node, lab) after `rounds` rounds; init lab(node) = node."""
 
-    def _free(ck: DataFrame) -> None:
-        try:
-            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-    # Pin the symmetric edge list once (same rationale as bfs_hops:
-    # lazy reuse re-executes the upstream edge construction per round).
-    sym = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .repartition("src")
-        .localCheckpoint(eager=False)
-    )
+    sym = _symmetric_edges(edges, a_col, b_col)
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -409,14 +374,14 @@ def label_propagation(
         .repartition("node")
         .localCheckpoint(eager=False)
     )
-    history = [labels]
-    for it in range(rounds):
+
+    def lpa_round(labels: DataFrame, _k, _pin) -> DataFrame:
         msgs = (
             labels.join(sym, labels["node"] == sym["src"])
             .groupBy(F.col("dst"), F.col("lab"))
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
+        return (
             msgs.groupBy("dst")
             .agg(
                 F.max(
@@ -426,17 +391,9 @@ def label_propagation(
             .select(
                 F.col("dst").alias("node"), (-F.col("m.nl")).alias("lab")
             )
-            .localCheckpoint(eager=(it == rounds - 1))
         )
-        history.append(labels)
-    # rounds=0 returns the still-lazy initial labels frame, which
-    # depends on the never-materialized sym checkpoint — freeing sym
-    # then would make the caller's first action fail (r12 ADVICE).
-    if rounds > 0:
-        for h in history[:-1]:
-            _free(h)
-        _free(sym)
-    return labels
+
+    return fixed_rounds(labels, lpa_round, rounds, inputs=(sym,))
 
 
 def hits_integer_bipartite(
@@ -470,15 +427,13 @@ def hits_integer_bipartite(
     ValueError (ADVICE r10: it previously crashed dereferencing the
     never-assigned previous-side frame).
 
-    Iteration shape (r12): one keyed join + one hash agg + a 1-row max
-    broadcast per round on LAZY localCheckpoints (the eager per-round
-    count jobs are skipped; the round's shuffles execute at compile
-    time under AQE either way), with the per-round sum table pinned so
-    the normalization broadcast and the output projection share one
-    execution. The LAST round is eager; every superseded round's
-    blocks are then freed explicitly except the two returned sides
-    (the eager-free discipline — see pagerank_integer). The two
-    overflow-guard degree scans are fused into ONE collect."""
+    Iteration shape: one keyed join + one hash agg + a 1-row max
+    broadcast per round on `operators.iterate.fixed_rounds`, with the
+    per-round sum table pinned so the normalization broadcast and the
+    output projection share one execution. The final round emits both
+    sides, so the one checkpoint that survives the call holds the
+    result. The two overflow-guard degree scans are fused into ONE
+    collect."""
     if iterations < 2:
         raise ValueError(
             "hits_integer_bipartite needs iterations >= 2 (the result "
@@ -486,11 +441,6 @@ def hits_integer_bipartite(
             "iteration never scores the starting side)"
         )
 
-    def _free(ck: DataFrame) -> None:
-        try:
-            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
     e = (
         edges.select(F.col(o_col).alias("o"), F.col(p_col).alias("p"))
         .distinct()
@@ -511,59 +461,34 @@ def hits_integer_bipartite(
             f"hits_integer_bipartite overflow risk: deg_max*scale² = "
             f"{deg_max}*{scale}² >= 2^63 — lower `scale`."
         )
-    cur = (
+    hubs = (
         e.select("o").distinct()
         .select(F.col("o").alias("node"), F.lit(scale).cast("long").alias("val"))
         .localCheckpoint(eager=False)
     )
-    side = "h"
-    prev_final = None
-    history = [cur]
-    for it in range(1, iterations + 1):
-        if side == "h":
-            joined = e.join(cur, e["o"] == cur["node"]).select(
-                F.col("p").alias("nxt"), "val"
-            )
-            side = "a"
-        else:
-            joined = e.join(cur, e["p"] == cur["node"]).select(
-                F.col("o").alias("nxt"), "val"
-            )
-            side = "h"
+
+    def hits_round(cur: DataFrame, k: int, pin) -> DataFrame:
+        # even rounds score authorities from hubs, odd rounds the reverse
+        frm, to, side = ("o", "p", "a") if k % 2 == 0 else ("p", "o", "h")
+        joined = e.join(cur, e[frm] == cur["node"]).select(
+            F.col(to).alias("nxt"), "val"
+        )
         # s feeds BOTH the 1-row max subtree and the normalized output:
-        # pin it lazily or the round's join+agg executes twice (the
-        # normalization broadcast materializes the blocks, the main
-        # path then reads them)
-        s = (
-            joined.groupBy("nxt")
-            .agg(F.sum("val").alias("s"))
-            .localCheckpoint(eager=False)
-        )
+        # pin it or the round's join+agg executes twice
+        s = pin(joined.groupBy("nxt").agg(F.sum("val").alias("s")))
         mx = s.agg(F.max("s").alias("mx"))
-        new = (
-            s.crossJoin(F.broadcast(mx))
-            .select(
-                F.col("nxt").alias("node"),
-                F.expr(f"CAST((s * {scale}) DIV mx AS BIGINT)").alias("val"),
-            )
-            .localCheckpoint(eager=(it == iterations))
+        new = s.crossJoin(F.broadcast(mx)).select(
+            F.col("nxt").alias("node"),
+            F.expr(f"CAST((s * {scale}) DIV mx AS BIGINT)").alias("val"),
         )
-        history.append(s)
-        if it == iterations - 1:
-            prev_final = new
-        else:
-            history.append(new)
-        cur = new
-    # the eager final round materialized the whole chain; free every
-    # superseded frame except the two returned sides
-    for h in history:
-        if h is not prev_final and h is not cur:
-            _free(h)
-    _free(e)
-    a_side, h_side = (prev_final, cur) if side == "h" else (cur, prev_final)
-    return a_side.select(
-        F.lit("a").alias("side"), "node", "val"
-    ).unionByName(h_side.select(F.lit("h").alias("side"), "node", "val"))
+        if k < iterations - 1:
+            return new
+        last = {side: new, "h" if side == "a" else "a": cur}
+        return last["a"].select(
+            F.lit("a").alias("side"), "node", "val"
+        ).unionByName(last["h"].select(F.lit("h").alias("side"), "node", "val"))
+
+    return fixed_rounds(hubs, hits_round, iterations, inputs=(e,))
 
 
 def personalized_pagerank_integer(
@@ -588,8 +513,7 @@ def personalized_pagerank_integer(
     whole edge construction for the seed argmax before e2's checkpoint
     ran it again). Same exactness and overflow arguments as
     pagerank_integer (total mass is ≤ scale here, strictly easier);
-    same lazy per-round join+agg shape (see pagerank_integer — one
-    pipelined job for all rounds, not one blocking job per round).
+    same per-round join+agg shape on `operators.iterate.fixed_rounds`.
 
     Returns (node, r) fixed-point ranks (nodes never reached hold 0
     implicitly and are not emitted — PPR mass is zero off the reachable
@@ -622,33 +546,24 @@ def personalized_pagerank_integer(
         .cast("long")
         .alias("r"),
     ).localCheckpoint(eager=False)
-    history = [ranks]
-    for it in range(iterations):
+
+    def ppr_round(ranks: DataFrame, _k, _pin) -> DataFrame:
         contrib = (
             e2.join(ranks, e2["src"] == ranks["node"])
             .select("dst", F.expr("r DIV od").alias("_c"))
             .groupBy("dst")
             .agg(F.sum("_c").alias("_sum"))
         )
-        ranks = contrib.select(
+        return contrib.select(
             F.col("dst").alias("node"),
             (
                 F.when(F.col("dst") == seed_node, F.lit(restart))
                 .otherwise(F.lit(0))
                 + F.expr(f"({damping_pct} * _sum) DIV 100")
             ).cast("long").alias("r"),
-        ).localCheckpoint(eager=(it == iterations - 1))
-        history.append(ranks)
-    # eager final round materialized the chain: free superseded blocks.
-    # iterations=0 returns the still-lazy initial ranks frame depending
-    # on the (possibly) never-materialized e2 — skip the frees then
-    # (r12 ADVICE; the seed argmax materializes e2 only when
-    # seed_node=None).
-    if iterations > 0:
-        for h in history[:-1]:
-            _free(h)
-        _free(e2)
-    return ranks
+        )
+
+    return fixed_rounds(ranks, ppr_round, iterations, inputs=(e2,))
 
 
 def anf_hop_registers(
@@ -826,54 +741,16 @@ def bfs_hops_tagged(
     visited is keyed on (seed, node).
 
     Returns (seed, node, hop) with hop ∈ [0, max_hops], exactly the
-    union of per-seed `bfs_hops` outputs (pytest-pinned).
-
-    r12 rework (same as bfs_hops): the per-round frontier is a LAZY
-    localCheckpoint materialized by the empty-frontier count (one job
-    per round instead of three), and the visited set is the plan-level
-    union of the frontier checkpoints — the old shape re-materialized
-    all visited rows every round (O(|V|·hops) checkpoint writes) and
-    needed the explicit superseded-frontier frees the r11 ADVICE
-    audited; now every frontier block set is part of the result and
-    nothing is freed or rewritten."""
-    spark = edges.sparkSession
-    sym = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .repartition("src")
-        .localCheckpoint(eager=False)
-    )
+    union of per-seed `bfs_hops` outputs (pytest-pinned); it runs the
+    same frontier loop as bfs_hops, keyed on (seed, node)."""
     frontier0 = (
-        spark.createDataFrame([(s,) for s in seeds], "seed bigint")
+        edges.sparkSession.createDataFrame([(s,) for s in seeds], "seed bigint")
         .select("seed", F.col("seed").alias("node"))
         .distinct()
         .withColumn("hop", F.lit(0))
         .repartition("node")
         .localCheckpoint(eager=False)
     )
-    fronts = [frontier0]
-    frontier = frontier0.select("seed", "node")
-    for h in range(1, max_hops + 1):
-        visited_keys = reduce(
-            lambda x, y: x.unionByName(y),
-            (f.select("seed", "node") for f in fronts),
-        )
-        reached = (
-            frontier.join(sym, frontier["node"] == sym["src"])
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-        )
-        new = (
-            reached.join(visited_keys, ["seed", "node"], "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=False)
-        )
-        if new.count() == 0:
-            _free(new)
-            break
-        fronts.append(new)
-        frontier = new.select("seed", "node")
-    _free(sym)  # every front is count-materialized; sym is unneeded
-    return reduce(lambda x, y: x.unionByName(y), fronts)
+    return _bfs_frontiers(
+        edges, frontier0, ["seed", "node"], max_hops, a_col, b_col
+    )[0]

@@ -9,10 +9,9 @@ DISTINCT-WORD dictionary (vocab ≪ corpus), and the only driver traffic
 is ONE (pair, count) row per round — the same legitimate-scalar budget
 as connected_components' convergence check.
 
-Iterative contract mirrors operators.dedup.connected_components:
-localCheckpoint per round (the next round reads the rewritten symbols
-twice — pair counting and the rewrite itself — so an un-truncated plan
-doubles per round), eager release of the superseded frontier.
+The loop runs on `operators.iterate.fixpoint`: each round's argmax
+collect materializes the rewritten dictionary's checkpoint and the
+dictionary it replaced is freed.
 
 The reference has no tokenizer surface (north-star extension,
 BASELINE.json). No DuckDB oracle — the loop is driver-controlled like
@@ -26,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .iterate import fixpoint
 
 
 def _merge_pair(syms: Column, a: str, b: str) -> Column:
@@ -88,10 +89,10 @@ def bpe_train(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wf"))
         .select(F.expr("split(w, '')").alias("syms"), "wf")
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
+
+    def top_pair(words: DataFrame) -> tuple[str, str] | None:
         # guard size >= 2 BEFORE the transform: Spark's sequence(1, 0)
         # is DESCENDING [1, 0] (NOTES rule), so a 1-symbol word would
         # fabricate a pair from a negative index instead of exploding
@@ -112,18 +113,17 @@ def bpe_train(
             .limit(1)
             .collect()
         )
-        if not top:
-            break
-        a, b = top[0]["a"], top[0]["b"]
-        merges.append((a, b))
-        new_words = words.select(
-            _merge_pair(F.col("syms"), a, b).alias("syms"), "wf"
-        ).localCheckpoint()
-        try:
-            words._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-        words = new_words
+        return (top[0]["a"], top[0]["b"]) if top else None
+
+    merges: list[tuple[str, str]] = []
+
+    def merge(words: DataFrame, pair: tuple[str, str], _pin) -> DataFrame:
+        merges.append(pair)
+        return words.select(_merge_pair(F.col("syms"), *pair).alias("syms"), "wf")
+
+    words = fixpoint(
+        words, merge, top_pair, lambda _prev, pair: pair is None, n_merges
+    )[0]
     vocab = (
         words.select(F.explode("syms").alias("symbol"), "wf")
         .groupBy("symbol")

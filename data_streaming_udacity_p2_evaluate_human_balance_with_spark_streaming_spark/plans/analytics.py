@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.iterate import fixed_rounds
 from ..sources.files import load_table
 from .copurchase import copurchase_edges, copurchase_pair_counts
 from .queries import register
@@ -2191,9 +2192,8 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one user-keyed window + one (cur,nxt) aggregate build
     the ≤|types|² edge table — the only corpus exchanges. The 30
-    iteration rounds run on |types|-row frames (localCheckpoint-ed per
-    round, pagerank's bounded-plan-depth discipline), costing 30 tiny
-    driver-scheduled jobs and zero corpus traffic."""
+    iteration rounds run on |types|-row frames
+    (`operators.iterate.fixed_rounds`), with zero corpus traffic."""
     ev = load_table(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -2219,9 +2219,9 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("s"),
         F.lit(1_000_000_000_000 // n_states).cast("long").alias("p"),
     ).localCheckpoint()
-    last_ck = dist
-    for i in range(30):
-        dist = (
+
+    def markov_step(dist: DataFrame, _k, _pin) -> DataFrame:
+        return (
             dist.join(pe, dist["s"] == pe["cur"])
             .select(
                 F.col("nxt").alias("s2"),
@@ -2233,19 +2233,11 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("term").cast("long").alias("p"))
             .withColumnRenamed("s2", "s")
         )
-        # checkpoint every 6 rounds: plan depth stays ≤ 6 tiny
-        # join+agg levels while eager materialization drops from 30
-        # jobs to 5 (each round is a |types|-row frame — the job
-        # scheduling, not the data, is the cost)
-        if (i + 1) % 6 == 0:
-            prev_ck, last_ck = last_ck, dist.localCheckpoint()
-            dist = last_ck
-            try:  # free the superseded checkpoint (CC discipline)
-                prev_ck._jdf.queryExecution().analyzed().rdd().unpersist(
-                    False
-                )
-            except Exception:
-                pass
+
+    # checkpoint every 6 rounds: plan depth stays ≤ 6 tiny join+agg
+    # levels (each round is a |types|-row frame — the job scheduling,
+    # not the data, is the cost)
+    dist = fixed_rounds(dist, markov_step, 30, every=6, inputs=(pe,))
     total = Window.partitionBy(F.lit(1))
     return dist.select(
         F.col("s").alias("event_type"),
@@ -2874,8 +2866,9 @@ def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("j", F.lit(1_000_000).cast("long").alias("v"))
         .localCheckpoint()
     )
-    for k in range(80):
-        nxt = (
+
+    def power_step(v: DataFrame, _k, _pin) -> DataFrame:
+        return (
             cw.join(v.withColumnRenamed("j", "i"), "i")
             .groupBy("j")
             .agg(F.sum(F.col("w") * F.col("v")).cast("long").alias("vn"))
@@ -2889,9 +2882,10 @@ def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "j", F.expr("(vn * 1000000L) div mx").alias("v")
             )
         )
-        # bounded plan depth: checkpoint every 10 rounds (markov
-        # discipline — the frame is 64 rows; scheduling is the cost)
-        v = nxt.localCheckpoint() if (k + 1) % 10 == 0 else nxt
+
+    # bounded plan depth: checkpoint every 10 rounds (the frame is 64
+    # rows; scheduling is the cost)
+    v = fixed_rounds(v, power_step, 80, every=10, inputs=(cw,))
     num = (
         c.join(v.select(F.col("j").alias("i"), F.col("v").alias("va")), "i")
         .join(v.select(F.col("j"), F.col("v").alias("vb")), "j")
@@ -8421,7 +8415,7 @@ def _fs_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = sc.orderBy(*order).limit(20)
     return top.withColumn(
         "rank", F.row_number().over(Window.orderBy(*order)).cast("bigint")
-    ).filter(F.col("rank") <= 20)
+    )
 
 
 #: the Fellegi-Sunter scored-pair CTE chain, shared by the top-20 query

@@ -100,6 +100,35 @@ def test_bench_contract_fast_subset(tmp_path):
     assert all(v >= 0 for v in payload["queries"].values()), payload["queries"]
 
 
+@pytest.mark.parametrize(
+    "queries,named",
+    [("dedup_exact,no_such_query", "no_such_query"), (" , ", "(none)")],
+    ids=["unknown_name", "empty_filter"],
+)
+def test_bench_rejects_bad_query_filter(queries, named):
+    """An unknown name, or a filter that leaves no query, fails fast:
+    non-zero exit naming the unknown queries, no JSON line, and no
+    idle wait or JVM start (the loadavg cap is forced high, so reaching
+    the wait would hang past the timeout)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_BENCH_QUERIES=queries,
+        SPARK_GRAFT_IDLE_WAIT_CAP="100000",
+    )
+    out = subprocess.run(
+        [sys.executable, "bench.py"],
+        cwd=repo,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert out.returncode != 0
+    assert named in out.stderr, out.stderr
+    assert "{" not in out.stdout, out.stdout
+
+
 @pytest.mark.slow
 def test_bench_prints_one_json_line(tmp_path):
     """FULL-headline smoke (every registered headline query runs and is

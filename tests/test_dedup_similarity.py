@@ -3,6 +3,7 @@ families must agree with their exact counterparts (recall), and the
 multimodal plumbing must produce the documented shapes.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators import (
@@ -462,20 +463,114 @@ def test_connected_components_multi_hop_chain(spark):
     assert shallow[109] != 100
 
 
-def test_connected_components_frees_checkpoint_blocks(spark):
-    """Checkpoint blocks are non-evictable and invisible to
-    clearCache(): the operator must free every superseded frontier
-    itself, leaving at most ONE extra cached RDD (the final labels) —
-    measured leaking ~10 block sets per call otherwise, degrading
-    later queries in the same session."""
-    sc = spark.sparkContext._jsc.sc()
-    before = len(sc.getRDDStorageInfo())
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 200, 2)], "doc_a long, doc_b long"
+def _chain(spark, n, cols="pa long, pb long"):
+    return spark.createDataFrame([(i, i + 1) for i in range(n)], cols)
+
+
+def _release_cases():
+    """(name, build(spark) -> DataFrame, bound): `bound` is the number
+    of checkpoints the returned frame still reads — the only block sets
+    the call may leave behind."""
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators import (
+        graphs,
     )
-    dedup.connected_components(pairs, max_iter=6).collect()
-    after = len(sc.getRDDStorageInfo())
-    assert after <= before + 1, (before, after)
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.plans.queries import (
+        REGISTRY,
+    )
+
+    k5 = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+    k5_chain = k5 + [(4, 10), (10, 11), (11, 12)]
+
+    def graph(spark):
+        return spark.createDataFrame(k5_chain, "pa long, pb long")
+
+    def registry(name):
+        return lambda spark: REGISTRY[name][0](spark, SF_SMOKE)
+
+    return [
+        ("k_core", lambda s: graphs.k_core(graph(s), 3), 1),
+        ("pagerank_integer", lambda s: graphs.pagerank_integer(graph(s), 5), 1),
+        (
+            "personalized_pagerank_integer",
+            lambda s: graphs.personalized_pagerank_integer(graph(s), iterations=5),
+            1,
+        ),
+        ("label_propagation", lambda s: graphs.label_propagation(graph(s), 3), 1),
+        (
+            "hits_integer_bipartite",
+            lambda s: graphs.hits_integer_bipartite(
+                _chain(s, 12, "o long, p long"), iterations=4
+            ),
+            1,
+        ),
+        (
+            "connected_components",
+            lambda s: dedup.connected_components(
+                s.createDataFrame(
+                    [(i, i + 1) for i in range(0, 200, 2)], "doc_a long, doc_b long"
+                )
+            ),
+            1,
+        ),
+        (
+            "connected_components_jump",
+            lambda s: dedup.connected_components_jump(
+                _chain(s, 16, "doc_a long, doc_b long")
+            ),
+            1,
+        ),
+        # one checkpoint per non-empty frontier: hops 0..3 on a 10-chain
+        (
+            "bfs_hops",
+            lambda s: graphs.bfs_hops(
+                _chain(s, 9), s.createDataFrame([(0,)], "node long"), 3
+            ),
+            4,
+        ),
+        ("bfs_hops_tagged", lambda s: graphs.bfs_hops_tagged(_chain(s, 9), [0, 5], 3), 4),
+        ("markov_stationary_events", registry("markov_stationary_events"), 1),
+        # the Gram matrix (read by the Rayleigh quotient) and the vector
+        ("pca_top_component", registry("pca_top_component"), 2),
+    ]
+
+
+@pytest.mark.parametrize(
+    "build,bound",
+    [pytest.param(b, n, id=name) for name, b, n in _release_cases()],
+)
+def test_iterative_operator_frees_checkpoint_blocks(spark, build, bound):
+    """Checkpoint blocks are non-evictable and invisible to
+    clearCache(): every iterative operator must free each checkpoint it
+    replaced itself, leaving only the ones its result still reads —
+    measured leaking ~10 block sets per call otherwise, degrading later
+    queries in the same session. No GC is forced: release must be
+    deterministic. Only RDDs created by this call are counted, so the
+    ContextCleaner releasing earlier tests' blocks cannot mask a leak."""
+    first_id = spark.sparkContext.emptyRDD().id()
+    build(spark).collect()
+    left = [
+        i.id()
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if i.id() > first_id
+    ]
+    assert len(left) <= bound, left
+
+
+def test_zero_rounds_return_init_untouched(spark):
+    """With zero rounds the initial frame is returned still lazy, so
+    nothing it reads may be freed: its first action must succeed and
+    give the round-0 state (label = node, rank mass on the seed)."""
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.graphs import (
+        label_propagation,
+        personalized_pagerank_integer,
+    )
+
+    e = _chain(spark, 3)
+    assert {
+        (r.node, r.lab) for r in label_propagation(e, 0).collect()
+    } == {(n, n) for n in range(4)}
+    ranks = personalized_pagerank_integer(e, seed_node=0, iterations=0, scale=10)
+    assert {(r.node, r.r) for r in ranks.collect()} == {(0, 10), (1, 0), (2, 0), (3, 0)}
 
 
 def test_fuzzy_block_guard_drops_mega_blocks(spark):
@@ -672,7 +767,7 @@ def test_embedding_mega_bucket_guard(spark):
 
 def test_connected_components_long_chain_early_stop(spark):
     """A planted path graph of diameter 15 (far beyond the default
-    max_iter=6): with a generous iteration cap, early_stop must end the
+    max_iter=6): with a generous iteration cap, the fixpoint test must end the
     loop at the FIXPOINT — one confirmation round after the 15 rounds
     min-label propagation needs — not at the cap, and every node must
     carry the true component minimum. Certifies the early-stop
@@ -685,7 +780,7 @@ def test_connected_components_long_chain_early_stop(spark):
     labels = {
         r.node: r.cluster
         for r in dedup.connected_components(
-            chain, max_iter=30, early_stop=True, stats=stats
+            chain, max_iter=30, stats=stats
         ).collect()
     }
     assert labels == {i: 0 for i in range(16)}
